@@ -33,7 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from satellite_data_ingestion_spark import registry
-from satellite_data_ingestion_spark.session import get_spark
+from satellite_data_ingestion_spark.session import codegen_counters, get_spark
 
 # ---------------------------------------------------------------------------
 # TIERED BENCH (VERDICT r12 task 2).  The flat headline list grew ~70
@@ -711,6 +711,10 @@ def main() -> None:
     )
     loop_t0 = time.perf_counter()
     timings: dict[str, float] = {}
+    # Codegen work inside the timed samples: a query that compiles on
+    # every call (per-call literals, or a thrashing class cache) shows here.
+    codegen_compiles: dict[str, int] = {}
+    codegen_compile_s: dict[str, float] = {}
     degraded: list[str] = []
     errors: dict[str, str] = {}
     for qi, name in enumerate(active):
@@ -733,6 +737,7 @@ def main() -> None:
                 # codegen) land here, NOT in the timed samples.
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples = []
+            cg0 = codegen_counters(spark)
             for _ in range(1 if over_budget else iters):
                 # Time fn() + execution: several operators do their real work
                 # EAGERLY inside fn (iterative connected components, streaming
@@ -743,6 +748,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 samples.append(time.perf_counter() - t0)
+            cg1 = codegen_counters(spark)
         except Exception as ex:  # noqa: BLE001
             # A single erroring query must not destroy the whole round's
             # perf artifact (found live: agg_bayes_ab's deliberate
@@ -754,6 +760,8 @@ def main() -> None:
             continue
         samples.sort()
         timings[name] = round(samples[len(samples) // 2], 3)
+        codegen_compiles[name] = cg1[0] - cg0[0]
+        codegen_compile_s[name] = round((cg1[1] - cg0[1]) / 1e9, 3)
         # Outside the timed region: drop the blocks this query's
         # localCheckpoints left behind before the next query runs.
         _cleanup_query_state(spark)
@@ -789,6 +797,8 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "codegen_compiles": codegen_compiles,
+        "codegen_compile_s": codegen_compile_s,
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "probe_first_sec": probe_first,

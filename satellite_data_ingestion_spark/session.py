@@ -11,6 +11,17 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
 - Shuffle partitions sized for the local test harness; on a real cluster
   AQE's coalescing makes the initial number a ceiling, not a fixed cost.
 - Arrow enabled so every pandas-UDF operator pays batch (not row) transfer.
+- Generated-code class cache sized to the operator working set.  Spark
+  keeps compiled whole-stage/expression classes in a cache of 100 entries
+  by default; one pass over eight jobs-heavy registry operators (the
+  ``operator_battery`` benchmark) needs about 290 distinct classes, so at
+  100 the cache thrashes and every repeated call recompiles its 16-60
+  classes through Janino and pays JIT, metaspace and GC for them again.
+  At 2000 a repeated call recompiles only the few classes whose source
+  differs per call (AQE numbers codegen stages in the order concurrent
+  query stages finish).  This is a *static* conf: it only applies to a
+  session this factory creates, so a session passed in through
+  ``__spark_entry__.entry`` keeps its own value.
 """
 
 from __future__ import annotations
@@ -39,5 +50,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Static: one battery pass compiles ~290 classes (default 100).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     return builder.getOrCreate()
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, int]:
+    """(classes compiled, compile nanoseconds) so far in this JVM, from
+    Spark's ``CodegenMetrics`` histogram and ``CodeGenerator`` timer."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, nanos

@@ -269,6 +269,34 @@ def test_runtime_bloom_filter_injects(spark):
             spark.conf.set(k, v)
 
 
+def test_repeated_operator_set_is_not_recompiled(spark):
+    """A working set of more generated classes than Spark's default class
+    cache holds (100) must not be recompiled when its operators run
+    again.  A cold pass over these three compiles ~160 classes, so at the
+    default size the cache thrashes and every pass recompiles them all.
+
+    The residual is not pinned at 0 because some source legitimately
+    differs from call to call: AQE numbers whole-stage codegen stages in
+    the order concurrently running query stages finish (the id is in the
+    class name and a source comment), and the argument order of split
+    ``doConsume`` functions follows per-call expression ids.  That
+    residual measured 0-26 classes per pass at sf0.001 on 4 cores."""
+    from satellite_data_ingestion_spark.session import codegen_counters
+
+    ops = ("agg_hodges_lehmann", "ext_bleu", "ext_dedup_minhash")
+
+    def one_pass() -> int:
+        before = codegen_counters(spark)[0]
+        for name in ops:
+            registry.spec(name).fn(spark, SF_SMOKE).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return codegen_counters(spark)[0] - before
+
+    passes = [one_pass() for _ in range(3)]
+    assert passes[-1] <= 50, passes
+
+
 def test_tpch2_q1_single_shuffle_with_pushdown(spark):
     """Q1: scan → partial agg → ONE hash exchange → final agg (the final
     orderBy's range exchange is separate); shipdate pushed."""

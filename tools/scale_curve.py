@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Measure the sf0.01 -> sf0.1 -> sf1 scale curve for the heavy cost
 classes (VERDICT r13 task 1): wall-clock (noop-sink, one warmed run per
-point, the round-7 method) + shuffle-write bytes from the Spark status
-REST API + output rows.  Appends one JSON line per (op, sf) to the
-output file so interrupted runs resume cheaply.
+point, the round-7 method) + shuffle-write bytes of the timed run's jobs
+(read from the status store under a per-point job group) + output rows.
+Appends one JSON line per (op, sf) to the output file so interrupted runs
+resume cheaply.
 
 Usage: python tools/scale_curve.py <out.jsonl> [op ...]
 Env: SCALE_SF_DIRS=dir1,dir2,... (default the three twin dirs)
@@ -12,33 +13,11 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from satellite_data_ingestion_spark import registry  # noqa: E402
-
-
-def get_spark():
-    """bench.py-equivalent session, but with the UI ON (the REST status
-    API is the shuffle-bytes source — the round-7 method)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.appName("scale-curve")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "20000")
-        .getOrCreate()
-    )
+from satellite_data_ingestion_spark.session import get_spark  # noqa: E402
 
 DEFAULT_OPS = [
     "ext_ngram_jaccard",
@@ -51,13 +30,20 @@ DEFAULT_OPS = [
 ]
 
 
-def shuffle_bytes(spark) -> int:
-    """Sum shuffle-write bytes over all completed stages (REST API)."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages?status=complete") as r:
-        stages = json.load(r)
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+def shuffle_bytes(spark, group: str) -> int:
+    """Sum shuffle-write bytes over the stages of ``group``'s jobs (status
+    store: works with the UI off)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    stages = {
+        sid
+        for jid in tracker.getJobIdsForGroup(group)
+        if (info := tracker.getJobInfo(jid)) is not None
+        for sid in info.stageIds
+    }
+    return sum(store.lastStageAttempt(sid).shuffleWriteBytes() for sid in stages)
 
 
 def main() -> None:
@@ -78,7 +64,7 @@ def main() -> None:
                 rec = json.loads(line)
                 done.add((rec["op"], rec["sf_dir"]))
     registry.load_all()
-    spark = get_spark()
+    spark = get_spark(app_name="scale-curve")
     spark.sparkContext.setLogLevel("ERROR")
     for sf_dir in dirs:
         for op in ops:
@@ -89,11 +75,12 @@ def main() -> None:
             t_warm0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
             warm_sec = time.time() - t_warm0
-            sb0 = shuffle_bytes(spark)
+            group = f"scale-curve {op} @ {sf_dir}"
+            spark.sparkContext.setJobGroup(group, group)
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
-            sb = shuffle_bytes(spark) - sb0
+            sb = shuffle_bytes(spark, group)
             rows = fn(spark, sf_dir).count()
             rec = {
                 "op": op, "sf_dir": sf_dir, "wall_sec": round(wall, 3),
