@@ -33,7 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from satellite_data_ingestion_spark import registry
-from satellite_data_ingestion_spark.session import codegen_counters, get_spark
+from satellite_data_ingestion_spark.session import codegen_counters, get_spark, group_counters
 
 # ---------------------------------------------------------------------------
 # TIERED BENCH (VERDICT r12 task 2).  The flat headline list grew ~70
@@ -715,6 +715,8 @@ def main() -> None:
     # every call (per-call literals, or a thrashing class cache) shows here.
     codegen_compiles: dict[str, int] = {}
     codegen_compile_s: dict[str, float] = {}
+    # Spark jobs per call over the same samples (one job group per query).
+    spark_jobs: dict[str, float] = {}
     degraded: list[str] = []
     errors: dict[str, str] = {}
     for qi, name in enumerate(active):
@@ -737,6 +739,8 @@ def main() -> None:
                 # codegen) land here, NOT in the timed samples.
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples = []
+            group = f"bench {name}"
+            spark.sparkContext.setJobGroup(group, group)
             cg0 = codegen_counters(spark)
             for _ in range(1 if over_budget else iters):
                 # Time fn() + execution: several operators do their real work
@@ -762,6 +766,7 @@ def main() -> None:
         timings[name] = round(samples[len(samples) // 2], 3)
         codegen_compiles[name] = cg1[0] - cg0[0]
         codegen_compile_s[name] = round((cg1[1] - cg0[1]) / 1e9, 3)
+        spark_jobs[name] = round(group_counters(spark, group)[0] / len(samples), 2)
         # Outside the timed region: drop the blocks this query's
         # localCheckpoints left behind before the next query runs.
         _cleanup_query_state(spark)
@@ -799,6 +804,7 @@ def main() -> None:
         "queries": timings,
         "codegen_compiles": codegen_compiles,
         "codegen_compile_s": codegen_compile_s,
+        "spark_jobs": spark_jobs,
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "probe_first_sec": probe_first,

@@ -2713,60 +2713,71 @@ def ext_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus BLEU, not sentence BLEU: clip/total counts pool over ALL
     pairs before the ratio (the standard Papineni formulation — robust
     to zero sentence overlaps).  Every count is an exact int64 from
-    per-pair n-gram joins; BLEU is one closed-form double (exp/ln of
+    per-pair n-gram counts; BLEU is one closed-form double (exp/ln of
     exact-int ratios) evaluated identically both engines.
 
     Scale shape: n-grams form INSIDE the token arrays (no position
-    self-join); per-pair gram joins shuffle on (pair, gram) — grain
-    proportional to corpus tokens, never pairs×vocab; the six totals
-    are 1-row aggregates.  100 TB: identical — the pair frame is the
-    eval set, orders of magnitude under the training corpus."""
+    self-join).  The pairing is one equi join on pid; each pair row then
+    explodes both sides' 1- and 2-grams once into (pid, n, g) rows,
+    which ONE groupBy counts per side (grain proportional to corpus
+    tokens, never pairs×vocab), and ONE global aggregate pools the
+    clipped and total counts.  An n = 0 row per pair carries the two
+    side lengths, so the pair count and lengths come from that same
+    aggregate.  100 TB: identical — the pair frame is the eval set,
+    orders of magnitude under the training corpus."""
     docs = table(spark, sf_dir, "documents")
     cand = docs.filter(F.col("doc_id") % _BLEU_STRIDE == 0).select(
         F.col("doc_id").alias("pid"), F.split("text", " ").alias("ct")
     )
     ref = docs.select((F.col("doc_id") - 1).alias("pid"), F.split("text", " ").alias("rt"))
-    # ~|docs|/stride pair rows with five consumers (two gram sides x two
-    # orders + the pooled length aggregate) — one documents self-join,
-    # materialized once (guide §2.4) instead of five.
-    pairs = cand.join(ref, "pid").localCheckpoint(eager=True)
+    pairs = cand.join(ref, "pid")
 
-    def grams(col, n):
-        if n == 1:
-            return col
+    def bigrams(col):
         # size<=1 => no bigrams: sequence(1, 0) would be the DESCENDING
         # array [1, 0] on this Spark build and element_at(col, 2) throws,
         # while DuckDB's generate_series(1, 0) is empty — guard to match.
-        return F.when(
-            F.size(col) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(col) - 1),
-                lambda i: F.concat_ws(" ", F.element_at(col, i), F.element_at(col, i + 1)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    def side_counts(src, col, n, out):
         return (
-            src.select("pid", F.explode(grams(F.col(col), n)).alias("g"))
-            .groupBy("pid", "g")
-            .agg(F.count(F.lit(1)).cast("long").alias(out))
+            f"CASE WHEN size({col}) >= 2 THEN transform(sequence(1, size({col}) - 1),"
+            f" i -> concat_ws(' ', element_at({col}, i), element_at({col}, i + 1)))"
+            " ELSE CAST(array() AS ARRAY<STRING>) END"
         )
 
-    clips = []
-    for n in (1, 2):
-        u = side_counts(pairs, "ct", n, "c")
-        v = side_counts(pairs, "rt", n, "r")
-        j = u.join(v, ["pid", "g"]).agg(
-            F.sum(F.least(F.col("c"), F.col("r"))).cast("long").alias(f"clip{n}")
+    def rows(n, grams, c, r):
+        # (n, g, c, r): c/r = 1 marks a candidate/reference occurrence
+        return (
+            f"transform(coalesce({grams}, CAST(array() AS ARRAY<STRING>)),"
+            f" g -> named_struct('n', {n}, 'g', g, 'c', {c}, 'r', {r}))"
         )
-        tot = u.agg(F.sum("c").cast("long").alias(f"tot{n}"))
-        clips.append(j.crossJoin(F.broadcast(tot)))
-    lens = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(F.size("ct")).cast("long").alias("clen"),
-        F.sum(F.size("rt")).cast("long").alias("rlen"),
+
+    # SQL text: built as Column objects the lambdas cost hundreds of py4j
+    # round trips per call.
+    counts = (
+        pairs.selectExpr(
+            "pid",
+            f"""inline(concat(
+                array(named_struct('n', 0, 'g', '', 'c', size(ct), 'r', size(rt))),
+                {rows(1, "ct", 1, 0)}, {rows(1, "rt", 0, 1)},
+                {rows(2, bigrams("ct"), 1, 0)}, {rows(2, bigrams("rt"), 0, 1)}))""",
+        )
+        .groupBy("pid", "n", "g")
+        .agg(F.sum("c").alias("c"), F.sum("r").alias("r"))
     )
-    t = lens.crossJoin(F.broadcast(clips[0])).crossJoin(F.broadcast(clips[1]))
+    n, c, r = F.col("n"), F.col("c"), F.col("r")
+
+    def pooled(cond, val):
+        return F.sum(F.when(cond, val)).cast("long")
+
+    # clip sums only grams present on both sides and totals only
+    # candidate grams (NULL when there are none, as the inner joins give)
+    t = counts.agg(
+        F.count(F.when(n == 0, 1)).cast("long").alias("n_pairs"),
+        pooled(n == 0, c).alias("clen"),
+        pooled(n == 0, r).alias("rlen"),
+        pooled((n == 1) & (c > 0) & (r > 0), F.least(c, r)).alias("clip1"),
+        pooled((n == 1) & (c > 0), c).alias("tot1"),
+        pooled((n == 2) & (c > 0) & (r > 0), F.least(c, r)).alias("clip2"),
+        pooled((n == 2) & (c > 0), c).alias("tot2"),
+    )
     p1 = F.col("clip1").cast("double") / F.col("tot1")
     p2 = F.col("clip2").cast("double") / F.col("tot2")
     bp = F.when(F.col("clen") > F.col("rlen"), F.lit(1.0)).otherwise(

@@ -13,9 +13,10 @@ Every operator here is ONE map-side-combined pass from the fact grain
 to a BOUNDED contingency frame (<= #levels_x x #levels_y cells: 350 for
 linenumber x quantity, 35 for priority x basket size, 25 for priority x
 priority, 120 for hour x event-type), and every subsequent pair count,
-margin, and fold runs on that bounded frame — the cell self-joins are
-cells^2 (<= ~122k rows), never data^2.  At 100 TB the only data-grain
-work is the first combine; the statistics are cell algebra.
+margin, and fold runs on that bounded frame — cell self-joins and
+pairwise folds are cells^2 (<= ~122k rows), never data^2.  At 100 TB
+the only data-grain work is the first combine; the statistics are cell
+algebra.
 
 Float discipline (BASELINE.md, operators/hypothesis.py): pair products
 and margins are EXACT int64 wherever the magnitude bound allows
@@ -80,51 +81,42 @@ ty AS (
 )"""
 
 
-def _pair_counts(cells: DataFrame) -> DataFrame:
-    """One (conc, disc) row from a broadcast self-join on the bounded cell
-    grid — each unordered both-axes-different pair is counted exactly once
-    via the a.x < b.x orientation."""
-    a = cells.select(
-        F.col("x").alias("xa"), F.col("y").alias("ya"), F.col("c").alias("ca")
-    )
-    b = cells.select(
-        F.col("x").alias("xb"), F.col("y").alias("yb"), F.col("c").alias("cb")
-    )
-    prod = F.col("ca") * F.col("cb")
-    return a.join(F.broadcast(b), F.col("xa") < F.col("xb")).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("yb") > F.col("ya"), prod).otherwise(F.lit(0))),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("conc"),
-        F.coalesce(
-            F.sum(F.when(F.col("yb") < F.col("ya"), prod).otherwise(F.lit(0))),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("disc"),
-    )
+def _total(arr: str, e: str = "e") -> str:
+    """Spark SQL: the exact int64 sum of the ``c`` fields of *arr*."""
+    return f"aggregate({arr}, 0L, (s, {e}) -> s + {e}.c)"
 
 
-def _margins(cells: DataFrame) -> DataFrame:
-    """(n, kx, ky, t2x, t2y) as one broadcast-joined row of exact int64."""
-    mm = cells.agg(
-        F.sum("c").cast("long").alias("n"),
-        F.countDistinct("x").cast("long").alias("kx"),
-        F.countDistinct("y").cast("long").alias("ky"),
+def _cell_stats(cells: DataFrame) -> DataFrame:
+    """One row (n, kx, ky, t2x, t2y, conc, disc) of exact int64 from a
+    bounded (x, y, c) cell frame: one aggregate gathers the cells into an
+    array and every statistic is a fold over it.  Each unordered
+    both-axes-different pair is counted once via the a.x < b.x
+    orientation (cells^2 lambda steps — <= 122k at 350 cells).  The folds
+    are SQL text: built as Column objects they cost ~1,000 py4j round
+    trips per call, more than the plan takes to run."""
+
+    def ties(axis):
+        # sum over the axis levels of the margin count m of m(m-1)
+        margins = (
+            f"transform(array_distinct(transform(cs, e -> e.{axis})), "
+            f"v -> {_total(f'filter(cs, e -> e.{axis} = v)')})"
+        )
+        return f"aggregate({margins}, 0L, (s, m) -> s + m * (m - 1))"
+
+    def pairs(cmp):
+        others = _total(f"filter(cs, b -> b.x > a.x AND b.y {cmp} a.y)", "b")
+        return f"aggregate(cs, 0L, (t, a) -> t + a.c * {others})"
+
+    cs = cells.agg(F.collect_list(F.struct("x", "y", "c")).alias("cs"))
+    return cs.selectExpr(
+        f"{_total('cs')} AS n",
+        "CAST(size(array_distinct(transform(cs, e -> e.x))) AS BIGINT) AS kx",
+        "CAST(size(array_distinct(transform(cs, e -> e.y))) AS BIGINT) AS ky",
+        f"{ties('x')} AS t2x",
+        f"{ties('y')} AS t2y",
+        f"{pairs('>')} AS conc",
+        f"{pairs('<')} AS disc",
     )
-    tx = (
-        cells.groupBy("x")
-        .agg(F.sum("c").cast("long").alias("nx"))
-        .agg(F.sum(F.col("nx") * (F.col("nx") - 1)).cast("long").alias("t2x"))
-    )
-    ty = (
-        cells.groupBy("y")
-        .agg(F.sum("c").cast("long").alias("ny"))
-        .agg(F.sum(F.col("ny") * (F.col("ny") - 1)).cast("long").alias("t2y"))
-    )
-    return mm.crossJoin(F.broadcast(tx)).crossJoin(F.broadcast(ty))
 
 
 _LI_CELLS_SQL = """SELECT CAST(l_linenumber AS BIGINT) AS x,
@@ -167,17 +159,13 @@ def agg_goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinal-association panel.
 
     All pair counts come from the 350-cell contingency grid (ONE
-    map-side combine over lineitem, then a broadcast cells^2 self-join —
-    122k cell pairs, never 3.6e11 row pairs).  C, D, n(n-1) and the
-    doubled tie margins nx(nx-1) are exact int64 (bounds in
-    :func:`_cd_sql`); the three ratios are single pinned double
-    expressions.  Scale: cell count is domain-bounded (7 x 50), flat in
-    fact volume."""
-    # 350-cell grid with four consumers (pair self-join + three margin
-    # aggregates) — one corpus scan, materialized once (guide §2.4).
-    cells = _li_cells(spark, sf_dir).localCheckpoint(eager=True)
-    cd = _pair_counts(cells)
-    st = cd.crossJoin(F.broadcast(_margins(cells)))
+    map-side combine over lineitem, then :func:`_cell_stats` folds over
+    the gathered cells — 122k cell pairs, never 3.6e11 row pairs).  C,
+    D, n(n-1) and the doubled tie margins nx(nx-1) are exact int64
+    (bounds in :func:`_cd_sql`); the three ratios are single pinned
+    double expressions.  Scale: cell count is domain-bounded (7 x 50),
+    flat in fact volume."""
+    st = _cell_stats(_li_cells(spark, sf_dir))
     num = F.col("conc").cast("double") - F.col("disc")
     n, m = F.col("n"), F.least("kx", "ky")
     return st.select(
@@ -231,11 +219,12 @@ def agg_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry more lines?") and d_xy on pairs untied on y; reporting both
     directions is the point of Somers over tau.
 
-    The cell grid is 5x7 = 35 cells built from ONE orderkey-keyed join
-    (orders x per-order line counts — both sides keyed on the join
-    column, AQE-planned) followed by a map-side combine; pair products
-    and doubled tie margins are exact int64; each D is one pinned double
-    division."""
+    The cell grid is 5x7 = 35 cells (domain-bounded) built from ONE
+    orderkey-keyed join (orders x per-order line counts — both sides
+    keyed on the join column, AQE-planned) followed by a map-side
+    combine; :func:`_cell_stats` folds the gathered cells into the exact
+    int64 pair products and doubled tie margins; each D is one pinned
+    double division."""
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     deg = li.groupBy(F.col("l_orderkey").alias("okey")).agg(
@@ -249,11 +238,8 @@ def agg_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
         pri.join(deg, "okey")
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        # 35-cell grid, four consumers — one orderkey join + combine,
-        # materialized once (guide §2.4).
-        .localCheckpoint(eager=True)
     )
-    st = _pair_counts(cells).crossJoin(F.broadcast(_margins(cells)))
+    st = _cell_stats(cells)
     num = F.col("conc").cast("double") - F.col("disc")
     n = F.col("n")
     return st.select(

@@ -178,6 +178,13 @@ def agg_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lower_median(col: str):
+    """The lower median of long column *col* as one exact aggregate: the
+    oracle's min c with cumulative count >= floor((n+1)/2).
+    ``percentile_disc`` returns a double, exact for |c| < 2^53."""
+    return F.expr(f"percentile_disc(0.5) WITHIN GROUP (ORDER BY {col})").cast("long")
+
+
 @register(
     "agg_mood_median",
     oracle=f"""
@@ -230,58 +237,45 @@ def agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything; Mood only asks above-or-below the grand median, so it
     tolerates wild tails and censored metering).
 
-    The grand LOWER MEDIAN is an exact order statistic over the
-    cents-domain histogram — value*100 lives in a DOMAIN-bounded range,
-    so the cumulative window is the bounded case, never data-grain (the
-    agg_xi_correlation y-grain argument).  The 2 x k chi-square folds in
-    sorted segment order; Wilson-Hilferty + shared Phi give the p."""
+    The grand LOWER MEDIAN (min c with cumulative count >= floor((n+1)/2))
+    is one exact ``percentile_disc(0.5)`` aggregate over the cents
+    column: the cents histogram grows with the data, so it is not
+    gathered into an array.  Each row is then tested against the
+    broadcast median and the counts combine to the event-type segments,
+    a frame the event-type DOMAIN bounds (<= 5 rows), gathered into one
+    array; the 2 x k chi-square folds over it in sorted segment order
+    and Wilson-Hilferty + shared Phi give the p."""
     ev = table(spark, sf_dir, "events").select(
         F.col("event_type").alias("g"),
         F.round(F.col("value") * 100).cast("long").alias("c"),
     )
-    hist = ev.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    w_c = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("c").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    hist = hist.select(
-        "c",
-        F.sum("cnt").over(w_c).cast("long").alias("cum"),
-        F.sum("cnt").over(w_all).cast("long").alias("nn"),
-    )
-    # med (1 row, pins the histogram window once for its three consumers)
-    # and seg (k rows, two consumers) each re-derived a corpus scan per
-    # consumer before — materialize once (guide §2.4).
-    med = hist.filter(
-        F.col("cum") >= F.floor((F.col("nn") + 1) / F.lit(2)).cast("long")
-    ).agg(F.min("c").alias("med")).localCheckpoint(eager=True)
-    seg = (
+    med = ev.agg(_lower_median("c").alias("med"))
+    segs = (
         ev.crossJoin(F.broadcast(med))
-        .groupBy("g")
+        .groupBy("med", "g")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(F.when(F.col("c") > F.col("med"), 1).otherwise(0))
             .cast("long")
             .alias("a"),
         )
-        .localCheckpoint(eager=True)
+        .groupBy("med")
+        .agg(F.array_sort(F.collect_list(F.struct("g", "n", "a"))).alias("segs"))
     )
-    ea = F.col("n").cast("double") * F.col("aa") / F.col("nn")
-    eb = F.col("n").cast("double") * (F.col("nn") - F.col("aa")) / F.col("nn")
-    cell = (F.col("a") - ea) * (F.col("a") - ea) / ea + (
-        (F.col("n") - F.col("a")) - eb
-    ) * ((F.col("n") - F.col("a")) - eb) / eb
-    tot = seg.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("n").cast("long").alias("nn"),
-        F.sum("a").cast("long").alias("aa"),
+    ea = "CAST(e.n AS DOUBLE) * aa / nn"
+    eb = "CAST(e.n AS DOUBLE) * (nn - aa) / nn"
+    cell = (
+        f"(e.a - {ea}) * (e.a - {ea}) / ({ea})"
+        f" + ((e.n - e.a) - {eb}) * ((e.n - e.a) - {eb}) / ({eb})"
     )
-    ch = (
-        seg.crossJoin(F.broadcast(tot))
-        .groupBy("k", "nn")
-        .agg(_ordfold(F.col("g"), cell).alias("chi2"))
-    )
-    return ch.crossJoin(F.broadcast(med)).select(
+    ch = segs.selectExpr(
+        "med",
+        "segs",
+        "CAST(size(segs) AS BIGINT) AS k",
+        "aggregate(segs, 0L, (s, e) -> s + e.n) AS nn",
+        "aggregate(segs, 0L, (s, e) -> s + e.a) AS aa",
+    ).selectExpr("k", "nn", "med", f"aggregate(segs, 0D, (s, e) -> s + {cell}) AS chi2")
+    return ch.select(
         "k",
         F.col("nn").alias("n"),
         F.col("med").alias("grand_median_cents"),
@@ -2251,70 +2245,59 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     robust; reported next to the plain mean so the skew gap is visible.
 
     NO pairwise stage: Walsh-average SUMS live on the <= 99-value
-    doubled-sum grid (value-histogram self-join, weights t_a*t_b exact
-    int64, diagonal t(t+1)/2 pairs via doubled weights so nothing
-    halves early); the median order statistics k1/k2 come from the
-    cumulative-weight grid (min s with cum >= k), and the estimate is
-    (s_(k1) + s_(k2))/4 — one pinned double at the very end.  Scale:
-    histogram-sized past the one combine."""
+    doubled-sum grid built from the value histogram (weights t_a*t_b
+    exact int64, diagonal t(t+1)/2 pairs via doubled weights so nothing
+    halves early); the median order statistics k1/k2 are min s with
+    cumulative weight >= k, and the estimate is (s_(k1) + s_(k2))/4 —
+    one pinned double at the very end.
+
+    Plan shape: one corpus scan combines to the quantity histogram,
+    whose size the quantity DOMAIN bounds (<= 50 values, flat in fact
+    volume), and one aggregate gathers it into an array.  The
+    Walsh-sum grid (<= 1275 weighted sums), its cumulative order
+    statistics and the mean are higher-order-function folds over that
+    array in the projection — no join, no checkpoint."""
     li = table(spark, sf_dir, "lineitem")
-    # <=50-value quantity histogram with 4-5 consumers — one corpus scan,
-    # materialized once (guide §2.4).
-    vh = (
+    h = (
         li.groupBy(F.col("l_quantity").cast("long").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
+        .agg(F.collect_list(F.struct("v", "t")).alias("h"))
     )
-    tot = vh.agg(F.sum("t").cast("long").alias("n"))
-    a = vh.select(F.col("v").alias("va"), F.col("t").alias("ta"))
-    b = vh.select(F.col("v").alias("vb"), F.col("t").alias("tb"))
-    ws = (
-        a.join(F.broadcast(b), F.col("va") < F.col("vb"))
-        .groupBy((F.col("va") + F.col("vb")).alias("s"))
-        .agg((2 * F.sum(F.col("ta") * F.col("tb"))).cast("long").alias("w2"))
-    )
-    wd = vh.select(
-        (2 * F.col("v")).alias("s"), (F.col("t") * (F.col("t") + 1)).alias("w2")
-    )
-    allw = (
-        ws.unionByName(wd)
-        .groupBy("s")
-        .agg(F.sum("w2").cast("long").alias("w2"))
-    )
-    ca = allw.select(F.col("s").alias("sa"))
-    cb = allw.select(F.col("s").alias("sb"), "w2")
-    cum = (
-        ca.join(F.broadcast(cb), F.col("sb") <= F.col("sa"))
-        .groupBy("sa")
-        .agg(F.sum("w2").cast("long").alias("cw2"))
-    )
-    np2 = tot.select("n", (F.col("n") * (F.col("n") + 1)).cast("long").alias("np2"))
-    ks = np2.select(
+    # The folds are SQL text: built as Column objects they cost ~1,500
+    # py4j round trips per call, more than the plan takes to run.
+    #
+    # walsh: (s, w2) over a.v < b.v pairs plus the diagonal, sorted by s;
+    # the running weight first reaching k at an element reaches it at
+    # the same s on the s-grouped grid, so no group-by is needed.
+    walsh = """array_sort(concat(
+        flatten(transform(h, a -> transform(filter(h, b -> b.v > a.v),
+            b -> named_struct('s', a.v + b.v, 'w2', 2 * a.t * b.t)))),
+        transform(h, a -> named_struct('s', 2 * a.v, 'w2', a.t * (a.t + 1)))))"""
+
+    def first_s(field, plus):
+        # s of the first element whose running weight reaches the doubled
+        # order statistic floor((n(n+1)/2 + plus)/2)*2 - 1
+        k = f"CAST(floor((CAST(n * (n + 1) AS DOUBLE) / 2 + {plus}) / 2) AS BIGINT) * 2 - 1"
+        return f"coalesce(acc.{field}, CASE WHEN acc.cw2 + e.w2 >= {k} THEN e.s END)"
+
+    out = h.selectExpr(
+        "aggregate(h, 0L, (s, e) -> s + e.t) AS n",
+        "aggregate(h, 0L, (s, e) -> s + e.t * e.v) AS tv",
+        "h",
+    ).selectExpr(
         "n",
-        "np2",
-        (
-            F.floor((F.col("np2").cast("double") / 2 + 1) / 2).cast("long") * 2 - 1
-        ).alias("k1x"),
-        (
-            F.floor((F.col("np2").cast("double") / 2 + 2) / 2).cast("long") * 2 - 1
-        ).alias("k2x"),
-    )
-    j = cum.crossJoin(F.broadcast(ks))
-    s1 = j.filter(F.col("cw2") >= F.col("k1x")).agg(F.min("sa").alias("s1"))
-    s2 = j.filter(F.col("cw2") >= F.col("k2x")).agg(F.min("sa").alias("s2"))
-    mean = vh.crossJoin(F.broadcast(tot)).agg(
-        (F.sum(F.col("t") * F.col("v")).cast("double") / F.first("n")).alias("m")
-    )
-    out = (
-        ks.crossJoin(F.broadcast(s1))
-        .crossJoin(F.broadcast(s2))
-        .crossJoin(F.broadcast(mean))
+        "tv",
+        "n * (n + 1) AS np2",
+        f"""aggregate({walsh},
+            named_struct('cw2', 0L, 'k1', CAST(NULL AS BIGINT), 'k2', CAST(NULL AS BIGINT)),
+            (acc, e) -> named_struct('cw2', acc.cw2 + e.w2,
+                                     'k1', {first_s("k1", 1)}, 'k2', {first_s("k2", 2)})) AS os""",
     )
     return out.select(
         "n",
         (F.col("np2") / 2).cast("long").alias("n_pairs"),
-        r6((F.col("s1") + F.col("s2")).cast("double") / 4.0).alias("hl_estimate"),
-        r6(F.col("m")).alias("mean"),
+        r6((F.col("os.k1") + F.col("os.k2")).cast("double") / 4.0).alias("hl_estimate"),
+        r6(F.col("tv").cast("double") / F.col("n")).alias("mean"),
     )
 
 

@@ -63,3 +63,27 @@ def codegen_counters(spark: SparkSession) -> tuple[int, int]:
     count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
     nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return count, nanos
+
+
+def group_counters(spark: SparkSession, group: str) -> tuple[int, int, int]:
+    """(jobs, stages, shuffle-write bytes) of the jobs run so far under job
+    group *group* (``SparkContext.setJobGroup``), read from the status
+    store, so it works with the UI off.  A stage shared by several jobs
+    counts once; a stage skipped because its shuffle output already
+    existed is not counted."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    jobs = [
+        info
+        for jid in tracker.getJobIdsForGroup(group)
+        if (info := tracker.getJobInfo(jid)) is not None
+    ]
+    stage_ids = {sid for info in jobs for sid in info.stageIds}
+    ran = [
+        st
+        for st in map(store.lastStageAttempt, stage_ids)
+        if st.status().toString() != "SKIPPED"
+    ]
+    return len(jobs), len(ran), sum(st.shuffleWriteBytes() for st in ran)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from satellite_data_ingestion_spark import registry
@@ -93,6 +94,32 @@ def test_mood_median_matches_reference(spark):
     # the op's chi2 is half-up quantized at 4 decimals (q4): +-5e-5
     assert abs(r.chi2 - chi2) < 6e-5 + 1e-9 * abs(chi2)
     assert r.k == len(groups) and r.n == nn
+
+
+@pytest.mark.parametrize("legacy", ["false", "true"])
+def test_lower_median_is_the_oracle_order_statistic(spark, legacy):
+    """agg_mood_median's grand median must be the oracle's definition —
+    min c with cumulative count >= floor((n+1)/2) — on odd, even and tied
+    frames, under both percentile_disc calculations Spark offers."""
+    from satellite_data_ingestion_spark.operators.monitoring import _lower_median
+
+    frames = [[1, 2, 3, 4], [1, 2, 3], [1, 1, 2, 2], [3, 1, 2, 2, 2, 9], [5], [7, -3], [4, 4, 4]]
+    rows = [(i, c) for i, cs in enumerate(frames) for c in cs]
+    df = spark.createDataFrame(rows, "i long, c long")
+    key = "spark.sql.legacy.percentileDiscCalculation"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, legacy)
+    try:
+        got = {r.i: r.m for r in df.groupBy("i").agg(_lower_median("c").alias("m")).collect()}
+    finally:
+        spark.conf.set(key, saved)
+    for i, cs in enumerate(frames):
+        k, cum = (len(cs) + 1) // 2, 0
+        for c in sorted(set(cs)):
+            cum += cs.count(c)
+            if cum >= k:
+                break
+        assert got[i] == c, (cs, got[i], c)
 
 
 def test_benford_matches_reference(spark):

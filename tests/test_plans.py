@@ -272,8 +272,11 @@ def test_runtime_bloom_filter_injects(spark):
 def test_repeated_operator_set_is_not_recompiled(spark):
     """A working set of more generated classes than Spark's default class
     cache holds (100) must not be recompiled when its operators run
-    again.  A cold pass over these three compiles ~160 classes, so at the
+    again.  A cold pass over these four compiles ~144 classes, so at the
     default size the cache thrashes and every pass recompiles them all.
+    (Operators whose tails are higher-order-function folds compile few
+    classes — those functions are interpreted — so they cannot fill the
+    cache.)
 
     The residual is not pinned at 0 because some source legitimately
     differs from call to call: AQE numbers whole-stage codegen stages in
@@ -283,7 +286,7 @@ def test_repeated_operator_set_is_not_recompiled(spark):
     residual measured 0-26 classes per pass at sf0.001 on 4 cores."""
     from satellite_data_ingestion_spark.session import codegen_counters
 
-    ops = ("agg_hodges_lehmann", "ext_bleu", "ext_dedup_minhash")
+    ops = ("agg_benford_test", "ext_heavy_hitters", "ext_dedup_minhash", "agg_qn_scale")
 
     def one_pass() -> int:
         before = codegen_counters(spark)[0]
@@ -295,6 +298,35 @@ def test_repeated_operator_set_is_not_recompiled(spark):
 
     passes = [one_pass() for _ in range(3)]
     assert passes[-1] <= 50, passes
+
+
+# Spark jobs per call (fn() plus a noop write) at SF_SMOKE: the measured
+# count.  Before their tails became array folds these operators ran 20,
+# 16, 14, 12 and 19 jobs (eager checkpoints and 1-row join chains).
+_JOB_COUNTS = {
+    "agg_hodges_lehmann": 3,
+    "agg_somers_d": 5,
+    "agg_goodman_kruskal_gamma": 3,
+    "agg_mood_median": 5,
+    "ext_bleu": 4,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_JOB_COUNTS))
+def test_folded_statistic_job_count(spark, name):
+    """Each folded operator runs as a few Spark jobs; the ceiling is the
+    measured count plus one, so a returning checkpoint or scalar join
+    chain fails.  Job counts do not depend on host load."""
+    from satellite_data_ingestion_spark.session import group_counters
+
+    group = f"job-count {name}"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        registry.spec(name).fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    jobs = group_counters(spark, group)[0]
+    assert jobs <= _JOB_COUNTS[name] + 1, jobs
 
 
 def test_tpch2_q1_single_shuffle_with_pushdown(spark):
@@ -929,14 +961,11 @@ def test_rsi_single_series_exchange(spark):
 
 
 def test_bleu_no_cartesian_pair_join(spark):
-    """ext_bleu's candidate-reference pairing and clipped-overlap joins
-    must stay equi joins (hash/sort-merge on pid / (pid, gram)); the
-    only nested-loop nodes allowed are the Cross-type combinators of
-    1-row scalar aggregates (the sanctioned bounded-crossJoin shape).
-    Since the r15 optimization the pid pairing join runs once inside the
-    materialized `pairs` checkpoint (five consumers shared it), so the
-    final plan reads the pair RDD and keeps only the (pid, gram)
-    clipped-overlap equi joins."""
+    """ext_bleu's candidate-reference pairing must stay an equi join
+    (hash/sort-merge/broadcast-hash on pid): the pair rows explode into
+    (pid, n, gram) rows that one groupBy counts per side and one global
+    aggregate pools, so no pair-by-pair or gram-by-gram nested loop may
+    appear."""
     tree = plan_of(spark, "ext_bleu").split("\n\n")[0]
     assert "CartesianProduct" not in tree, tree
     assert "BroadcastNestedLoopJoin Inner" not in tree, tree

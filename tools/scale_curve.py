@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from satellite_data_ingestion_spark import registry  # noqa: E402
-from satellite_data_ingestion_spark.session import get_spark  # noqa: E402
+from satellite_data_ingestion_spark.session import get_spark, group_counters  # noqa: E402
 
 DEFAULT_OPS = [
     "ext_ngram_jaccard",
@@ -28,22 +28,6 @@ DEFAULT_OPS = [
     "pipeline_minhash_index_maintain",
     "stream_heavy_hitters",
 ]
-
-
-def shuffle_bytes(spark, group: str) -> int:
-    """Sum shuffle-write bytes over the stages of ``group``'s jobs (status
-    store: works with the UI off)."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    tracker, store = sc.statusTracker(), jsc.statusStore()
-    stages = {
-        sid
-        for jid in tracker.getJobIdsForGroup(group)
-        if (info := tracker.getJobInfo(jid)) is not None
-        for sid in info.stageIds
-    }
-    return sum(store.lastStageAttempt(sid).shuffleWriteBytes() for sid in stages)
 
 
 def main() -> None:
@@ -80,7 +64,7 @@ def main() -> None:
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
-            sb = shuffle_bytes(spark, group)
+            sb = group_counters(spark, group)[2]
             rows = fn(spark, sf_dir).count()
             rec = {
                 "op": op, "sf_dir": sf_dir, "wall_sec": round(wall, 3),
